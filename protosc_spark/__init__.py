@@ -16,7 +16,7 @@ tables:
   (dedup.py, similarity.py, textops.py)
 
 Everything is DataFrame-first: Catalyst handles pushdown/pruning; Python
-appears only in Arrow-vectorized pandas UDFs, never per-row.
+appears only in Arrow-vectorized pandas/Arrow UDFs, never per-row.
 """
 
 __version__ = "0.1.0"

@@ -47,7 +47,7 @@ from pyspark.sql import types as T
 def _hash_tokens(tokens: list[str], n_features: int) -> np.ndarray:
     """Stable token -> bucket ids. Python's builtin hash is salted per
     process; crc32 is the engine's C-speed platform-stable choice
-    (same rationale as features/text.hashed_ngram_np) — identical on
+    (same rationale as features/text.text_block) — identical on
     driver and every executor, and ~100x faster than a per-byte Python
     FNV loop in this per-token hot path."""
     from zlib import crc32

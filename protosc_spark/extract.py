@@ -19,13 +19,16 @@ pipeline/feature-matrix layer):
   :class:`FeatureRegistry` (driver-side, broadcast-small). Schema is
   declared at construction time instead of inferred from sample 0
   (reference protosc/feature_matrix.py:48-67), which is what lets the
-  pandas UDFs have static return types.
+  Arrow UDFs have static return types.
 
 Scale notes: extraction is a single narrow ``select`` over the scan —
 no shuffle; JVM-expression extractors stay inside whole-stage codegen,
-pandas-UDF extractors ride one Arrow batch exchange. Window features
-are appended afterwards by the pipeline (windows.py) and share one
-shuffle on conv_id.
+and the Arrow-UDF extractors (features/text.py) ride one Arrow batch
+exchange: one ArrowEvalPython node, whose kernel reads the Arrow
+buffers of ``text`` and writes one flat float64 buffer per batch, with
+no Python work per row, token or gram. Window features are appended
+afterwards by the pipeline (windows.py) and share one shuffle on
+conv_id.
 """
 
 from __future__ import annotations

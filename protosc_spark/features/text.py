@@ -5,9 +5,15 @@ and obeys the same contract: fixed declared width, per-sample map, no
 cross-row state (cross-row features come from windows.py, never here —
 that separation is what makes leakage impossible in this layer).
 
-JVM-expression extractors stay inside whole-stage codegen; the two
-numpy-ish ones (char_hist, hashed_ngram) are Arrow-vectorized pandas
-UDFs (series -> series of arrays), never per-row Python.
+JVM-expression extractors stay inside whole-stage codegen. char_hist
+and hashed_ngram are two slices of ONE Arrow UDF (``F.arrow_udf``,
+which Spark plans as a single ArrowEvalPython node): its kernel,
+:func:`text_block`, reads the ``text`` column's Arrow offset and data
+buffers and returns one flat float64 buffer as a ListArray. Tokens and
+grams are byte spans of the input buffer; there is no Python loop over
+rows, tokens or grams, and no Python string is ever built. The pandas
+oracle (oracle/pandas_flagship.py) recomputes both blocks with
+per-token Python kernels, as an independent check.
 
 Reference analogies:
 * length_stats  — the scalar summaries protosc computes implicitly
@@ -23,10 +29,11 @@ Reference analogies:
 
 from __future__ import annotations
 
-from zlib import crc32
+import sys
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -57,63 +64,228 @@ length_stats = Extractor(
 )
 
 # ---------------------------------------------------------------------------
-# char_hist: density histogram of token lengths (ColorFeatures analog)
+# char_hist + hashed_ngram: one Arrow-native kernel over the text buffers
 # ---------------------------------------------------------------------------
 
 CHAR_HIST_BINS = 8
 CHAR_HIST_RANGE = (0.0, 8.0)
+NGRAM_BUCKETS = 16
 
 
-def _token_lists(texts) -> list:
-    return [t.split(" ") if t else [] for t in texts]
+def _crc32_table() -> np.ndarray:
+    """zlib's byte table for the reflected CRC-32 (polynomial 0xEDB88320)."""
+    c = np.arange(256, dtype=np.uint32)
+    for _ in range(8):
+        c = np.where(c & 1, np.uint32(0xEDB88320) ^ (c >> 1), c >> 1)
+    return c
 
 
-def token_length_hist_np(texts: np.ndarray) -> np.ndarray:
-    """Shared by the Spark UDF and the pandas oracle: density histogram
-    of token lengths per text (same semantics as np.histogram with
-    bins=8, range=(0,8), density=True), fully vectorized across the
-    batch: one flat bincount instead of a histogram call per row."""
-    return _char_hist_from_tokens(_token_lists(texts))
+_CRC32_TABLE = _crc32_table()
+_CRC_PIECE = 255  # longest span hashed byte by byte; longer ones are split
+_LOW_BYTE = 0 if sys.byteorder == "little" else 3  # of a uint32 viewed as bytes
 
 
-def _char_hist_from_tokens(tok_lists: list) -> np.ndarray:
-    n = len(tok_lists)
-    lens_per_row = [[len(tok) for tok in v] for v in tok_lists]
-    counts = np.fromiter((len(v) for v in lens_per_row), dtype=np.int64, count=n)
-    if counts.sum() == 0:
-        return np.zeros((n, CHAR_HIST_BINS))
-    rows = np.repeat(np.arange(n), counts)
-    vals = np.fromiter(
-        (x for v in lens_per_row for x in v), dtype=np.float64, count=counts.sum()
+def _zero_bytes_table(n: int) -> np.ndarray:
+    """(4, 256) tables of the linear map that runs ``n`` zero bytes
+    through the CRC register, one table per register byte. It is the
+    map of zlib's crc32_combine: ``crc32(a + b) == shift(crc32(a)) ^
+    crc32(b)`` when ``len(b) == n``."""
+    v = np.arange(256, dtype=np.uint32)[None, :] << (
+        8 * np.arange(4, dtype=np.uint32)[:, None]
     )
-    lo, hi = CHAR_HIST_RANGE
-    width = (hi - lo) / CHAR_HIST_BINS
-    in_range = (vals >= lo) & (vals <= hi)
-    bins = np.minimum(
-        ((vals - lo) / width).astype(np.int64), CHAR_HIST_BINS - 1
-    )  # right edge of the last bin is inclusive, like np.histogram
-    flat = np.bincount(
-        rows[in_range] * CHAR_HIST_BINS + bins[in_range],
-        minlength=n * CHAR_HIST_BINS,
-    ).reshape(n, CHAR_HIST_BINS)
+    for _ in range(n):
+        v = _CRC32_TABLE[v & 0xFF] ^ (v >> 8)
+    return v
+
+
+_PIECE_SHIFT = _zero_bytes_table(_CRC_PIECE)
+
+
+def _crc32_short(data: np.ndarray, start: np.ndarray, length: np.ndarray) -> np.ndarray:
+    """crc32 of spans of at most ``_CRC_PIECE`` bytes, table-driven: one
+    numpy step per byte position instead of one call per span. Spans are
+    ordered by descending length (a uint8 radix argsort), so the spans
+    still running at position ``j`` are a prefix that shrinks as they
+    end."""
+    k = len(start)
+    order = np.argsort((_CRC_PIECE - length).astype(np.uint8), kind="stable")
+    ptr = start[order].astype(np.intp)  # np.take converts narrower indices
+    running = k - np.cumsum(np.bincount(length))  # spans longer than j
+    crc = np.full(k, 0xFFFFFFFF, np.uint32)
+    byte, word = np.empty(k, np.uint8), np.empty(k, np.uint32)
+    for j, m in enumerate(running[:-1]):
+        c, x, t = crc[:m], byte[:m], word[:m]
+        np.take(data[j:], ptr[:m], out=x)  # byte j of every running span
+        x ^= c.view(np.uint8)[_LOW_BYTE::4]  # low byte of the register
+        c >>= 8
+        np.take(_CRC32_TABLE, x, out=t)
+        c ^= t
+    out = np.empty_like(crc)
+    out[order] = crc ^ np.uint32(0xFFFFFFFF)
+    return out
+
+
+def crc32_spans(data: np.ndarray, start: np.ndarray, length: np.ndarray) -> np.ndarray:
+    """``zlib.crc32(data[start[i]:start[i] + length[i]])`` for every span
+    at once (uint32).
+
+    A span longer than ``_CRC_PIECE`` bytes is cut into a head of
+    1..255 bytes and whole 255-byte pieces; every piece is hashed as a
+    short span, and a span's pieces are folded left to right with
+    ``crc32(a + piece) == shift(crc32(a)) ^ crc32(piece)``. So the
+    numpy loops run at most 255 steps plus one per piece of the longest
+    span, however long a token is."""
+    long = np.flatnonzero(length > _CRC_PIECE)
+    if not len(long):
+        return _crc32_short(data, start, length)
+    n_bytes = length[long].astype(np.int64)
+    n_pieces = -(-n_bytes // _CRC_PIECE)
+    by_pieces = np.argsort(-n_pieces, kind="stable")  # fold prefix shrinks
+    long, n_bytes, n_pieces = long[by_pieces], n_bytes[by_pieces], n_pieces[by_pieces]
+    first = np.cumsum(n_pieces) - n_pieces
+    span = np.repeat(np.arange(len(long)), n_pieces)
+    j = np.arange(len(span)) - first[span]
+    head = (n_bytes - _CRC_PIECE * (n_pieces - 1))[span]
+    short = np.flatnonzero(length <= _CRC_PIECE)
+    piece_start = start[long][span] + np.where(j, head + (j - 1) * _CRC_PIECE, 0)
+    piece_len = np.where(j, _CRC_PIECE, head)
+    crc = _crc32_short(
+        data,
+        np.concatenate([start[short], piece_start]),
+        np.concatenate([length[short], piece_len]),
+    )
+    out = np.empty(len(start), np.uint32)
+    out[short] = crc[: len(short)]
+    piece = crc[len(short):]
+    acc = piece[first]
+    s0, s1, s2, s3 = _PIECE_SHIFT
+    running = len(long) - np.cumsum(np.bincount(n_pieces))  # spans with > j pieces
+    for j, m in enumerate(running[1:-1], 1):
+        c = acc[:m]
+        shifted = s0[c & 0xFF] ^ s1[(c >> 8) & 0xFF] ^ s2[(c >> 16) & 0xFF] ^ s3[c >> 24]
+        acc[:m] = shifted ^ piece[first[:m] + j]
+    out[long] = acc
+    return out
+
+
+def _utf8_rows(texts: pa.Array) -> tuple[np.ndarray, np.ndarray]:
+    """(bytes, row boundaries) straight from the Arrow buffers: row ``i``
+    is ``bytes[pos[i]:pos[i + 1]]``; NULL reads as ``""``. Positions are
+    int32 unless the batch holds 2 GiB of text."""
+    if texts.null_count:
+        texts = pc.fill_null(texts, "")
+    n = len(texts)
+    _, offsets, values = texts.buffers()
+    odt = np.int64 if pa.types.is_large_string(texts.type) else np.int32
+    off = np.frombuffer(offsets, odt, count=texts.offset + n + 1)[texts.offset:]
+    base, top = int(off[0]), int(off[-1])
+    if top == base:
+        return np.empty(0, np.uint8), np.zeros(n + 1, np.int32)
+    data = np.frombuffer(values, np.uint8, count=top)[base:]
+    idx = np.int32 if top - base < 2**31 else np.int64
+    return data, (off - base).astype(idx)
+
+
+def _row_density(keys: np.ndarray, n: int, width: int, out: np.ndarray, scale: float = 1.0) -> None:
+    """Per-row histogram of ``keys`` (row * width + bin) divided by the
+    row's total count times ``scale``; rows with no counts stay 0."""
+    flat = np.bincount(keys, minlength=n * width).reshape(n, width)
     totals = flat.sum(axis=1, keepdims=True).astype(np.float64)
-    totals[totals == 0] = 1.0  # empty rows -> all-zero histogram
-    return flat / (totals * width)
+    totals[totals == 0] = 1.0
+    np.divide(flat, totals * scale, out=out)
 
 
-@F.pandas_udf(ARR)
-def _char_hist_udf(texts: pd.Series) -> pd.Series:
-    m = token_length_hist_np(texts.fillna("").to_numpy())
-    return pd.Series(list(m))
+def text_block(texts: pa.Array) -> np.ndarray:
+    """char_hist ++ hashed_ngram (width 8 + 16) of a string Arrow array.
+
+    Works on the buffers, never on Python strings, and is bit-identical
+    to tokenizing with ``str.split(" ")``:
+
+    * tokens are the spans between 0x20 bytes of a row, so ``""`` has
+      no token and doubled, leading or trailing spaces make empty ones;
+    * a token's length in characters is its byte length minus its UTF-8
+      continuation bytes (0x80-0xBF), which is Python's ``len``;
+    * the bigram ``"a b"`` is the byte span from the start of ``a`` to
+      the end of ``b``, so every gram is a (start, length) span hashed
+      in place by :func:`crc32_spans`.
+
+    char_hist is the density histogram of token lengths (``np.histogram``
+    with ``bins=8, range=(0, 8), density=True``; longer tokens fall
+    outside); hashed_ngram is the L1-normalized count of uni+bigrams per
+    ``crc32 % 16`` bucket. The crc32 bucket is part of the feature
+    definition: platform-stable, and equal to Spark's ``crc32``.
+    """
+    n = len(texts)
+    data, pos = _utf8_rows(texts)
+    idx = pos.dtype
+    spaces = np.flatnonzero(data == 0x20).astype(idx)
+    nonempty = pos[1:] > pos[:-1]
+    n_tok = np.diff(np.searchsorted(spaces, pos)).astype(idx) + 1
+    n_tok[~nonempty] = 0
+    n_tokens = int(n_tok.sum())
+    # Tokens in buffer order: a row's first token starts at the row,
+    # every other one one byte after a space; a row's last token ends
+    # at the row's end, every other one at a space.
+    is_first = np.zeros(n_tokens + 1, bool)
+    is_first[(np.cumsum(n_tok) - n_tok)[nonempty]] = True
+    is_first[n_tokens] = True
+    is_last = is_first[1:]
+    is_first = is_first[:-1]
+    tok_start = np.empty(n_tokens, idx)
+    tok_start[is_first] = pos[:-1][nonempty]
+    tok_start[~is_first] = spaces + 1
+    tok_end = np.empty(n_tokens, idx)
+    tok_end[is_last] = pos[1:][nonempty]
+    tok_end[~is_last] = spaces
+    tok_row = np.repeat(np.arange(n, dtype=idx), n_tok)
+    tok_bytes = tok_end - tok_start
+
+    out = np.empty((n, CHAR_HIST_BINS + NGRAM_BUCKETS))
+
+    if n_tokens and data.max() >= 0x80:
+        n_cont = np.zeros(len(data) + 1, idx)
+        np.cumsum((data & 0xC0) == 0x80, out=n_cont[1:])
+        tok_chars = tok_bytes - (n_cont[tok_end] - n_cont[tok_start])
+    else:
+        tok_chars = tok_bytes
+    lo, hi = CHAR_HIST_RANGE
+    bin_width = (hi - lo) / CHAR_HIST_BINS
+    fits = (tok_chars >= lo) & (tok_chars <= hi)
+    # the right edge of the last bin is inclusive, like np.histogram
+    bins = np.minimum(((tok_chars[fits] - lo) / bin_width).astype(idx), CHAR_HIST_BINS - 1)
+    _row_density(tok_row[fits] * CHAR_HIST_BINS + bins, n, CHAR_HIST_BINS,
+                 out[:, :CHAR_HIST_BINS], bin_width)
+
+    pair = ~is_last[:-1]  # token k and k + 1 share a row
+    bi_start = tok_start[:-1][pair]
+    crc = crc32_spans(
+        data,
+        np.concatenate([tok_start, bi_start]),
+        np.concatenate([tok_bytes, tok_end[1:][pair] - bi_start]),
+    )
+    gram_row = np.concatenate([tok_row, tok_row[:-1][pair]])
+    _row_density(gram_row * NGRAM_BUCKETS + (crc % NGRAM_BUCKETS).astype(idx), n,
+                 NGRAM_BUCKETS, out[:, CHAR_HIST_BINS:])
+    return out
+
+
+@F.arrow_udf(ARR)
+def _text_block_udf(texts: pa.Array) -> pa.Array:
+    """char_hist and hashed_ngram both slice this one call; Spark's
+    ExtractPythonUDFs dedups the identical calls into one ArrowEvalPython
+    node, so ``text`` crosses to Python and is tokenized once."""
+    m = text_block(texts)
+    offsets = np.arange(0, m.size + 1, m.shape[1], dtype=np.int32)
+    return pa.ListArray.from_arrays(offsets, m.ravel())
 
 
 def _char_hist_jvm(df: DataFrame) -> Column:
-    """Pure-JVM variant, bit-equal to token_length_hist_np. NOT the
+    """Pure-JVM variant, bit-equal to :func:`text_block`. NOT the
     default: Spark evaluates higher-order functions (transform/filter)
     interpreted, per element, and does NOT share the bin array across
-    the 16 filter lambdas — measured ~20x SLOWER than the Arrow
-    pandas UDF at sf0.1. Kept as the reference implementation for the
-    bit-parity test and as documentation of the measurement."""
+    the 16 filter lambdas — measured over ~20x SLOWER than the Arrow
+    UDF at sf0.1. Kept as a second reference implementation for the bit-parity
+    test and as documentation of the measurement."""
     lo, hi = CHAR_HIST_RANGE
     lens = F.transform(F.col("__tokens"), lambda t: F.length(t).cast("double"))
     in_range = F.filter(lens, lambda v: (v >= F.lit(lo)) & (v <= F.lit(hi)))
@@ -139,33 +311,16 @@ def _char_hist_jvm(df: DataFrame) -> Column:
     ).otherwise(dens)
 
 
-def text_batch_np(texts: np.ndarray) -> np.ndarray:
-    """Fused kernel: tokenize ONCE, emit char_hist ++ hashed_ngram
-    (width 8+16). Both extractors slice the SAME UDF call below, which
-    Spark's ExtractPythonUDFs dedups into one ArrowEvalPython node —
-    one Arrow transfer of `text`, one tokenization pass, instead of two
-    each (the extract stage is the flagship's dominant cost)."""
-    tl = _token_lists(texts)
-    return np.hstack([_char_hist_from_tokens(tl), _ngram_from_tokens(tl)])
-
-
-@F.pandas_udf(ARR)
-def _text_batch_udf(texts: pd.Series) -> pd.Series:
-    m = text_batch_np(texts.fillna("").to_numpy())
-    return pd.Series(list(m))
-
-
 char_hist = Extractor(
     name="char_hist",
     width=CHAR_HIST_BINS,
-    build=lambda df: F.slice(_text_batch_udf(F.col("text")), 1, CHAR_HIST_BINS),
+    build=lambda df: F.slice(_text_block_udf(F.col("text")), 1, CHAR_HIST_BINS),
 )
 
 # ---------------------------------------------------------------------------
 # hashed_ngram: L1-normalized counts of hashed token uni+bigrams
 # ---------------------------------------------------------------------------
 
-NGRAM_BUCKETS = 16
 _FNV_OFFSET = 14695981039346656037
 _FNV_PRIME = 1099511628211
 _MASK64 = (1 << 64) - 1
@@ -180,57 +335,12 @@ def _fnv1a(s: str) -> int:
     return h
 
 
-def hashed_ngram_np(texts: np.ndarray, buckets: int = NGRAM_BUCKETS) -> np.ndarray:
-    """Gram bucket = crc32 (C-speed, platform-stable) — the hash choice
-    is part of this engine's feature definition; the oracle shares this
-    exact kernel.
-
-    Batch-vectorized: all uni+bigrams of the batch go through ONE
-    map(crc32) + ONE bincount instead of per-row numpy indexing (the
-    extract stage is the flagship's hot loop; this kernel shape scales
-    it ~2x better across executor counts)."""
-    return _ngram_from_tokens(_token_lists(texts), buckets)
-
-
-def _ngram_from_tokens(tok_lists: list, buckets: int = NGRAM_BUCKETS) -> np.ndarray:
-    n = len(tok_lists)
-    uni = [g.encode() for v in tok_lists for g in v]
-    bi = [
-        (a + " " + b).encode()
-        for v in tok_lists
-        for a, b in zip(v, v[1:])
-    ]
-    n_uni = np.fromiter((len(v) for v in tok_lists), dtype=np.int64, count=n)
-    rows = np.concatenate(
-        [
-            np.repeat(np.arange(n), n_uni),
-            np.repeat(np.arange(n), np.maximum(n_uni - 1, 0)),
-        ]
-    )
-    grams = uni + bi
-    if not grams:
-        return np.zeros((n, buckets))
-    h = np.fromiter(map(crc32, grams), dtype=np.int64, count=len(grams))
-    flat = np.bincount(
-        rows * buckets + h % buckets, minlength=n * buckets
-    ).reshape(n, buckets)
-    totals = flat.sum(axis=1, keepdims=True).astype(np.float64)
-    totals[totals == 0] = 1.0
-    return flat / totals
-
-
-@F.pandas_udf(ARR)
-def _hashed_ngram_udf(texts: pd.Series) -> pd.Series:
-    m = hashed_ngram_np(texts.fillna("").to_numpy())
-    return pd.Series(list(m))
-
-
 def _hashed_ngram_jvm(df: DataFrame) -> Column:
-    """Pure-JVM variant of hashed_ngram_np (Spark's crc32 == zlib's, so
-    buckets are bit-identical). NOT the default — same interpreted
-    higher-order-function cost as _char_hist_jvm (crc32 re-evaluated
-    once per bucket comparison pass); the Arrow pandas UDF is ~20x
-    faster. Kept for the bit-parity test."""
+    """Pure-JVM variant of the hashed_ngram block of :func:`text_block`
+    (Spark's crc32 == zlib's, so buckets are bit-identical). NOT the
+    default — same interpreted higher-order-function cost as
+    _char_hist_jvm (crc32 re-evaluated once per bucket comparison pass);
+    the Arrow UDF is over ~20x faster. Kept for the bit-parity test."""
     toks = F.col("__tokens")
     n = F.size(toks)
     bucket = lambda c: F.pmod(F.crc32(F.encode(c, "UTF-8")), F.lit(NGRAM_BUCKETS))  # noqa: E731
@@ -264,7 +374,7 @@ hashed_ngram = Extractor(
     name="hashed_ngram",
     width=NGRAM_BUCKETS,
     build=lambda df: F.slice(
-        _text_batch_udf(F.col("text")), CHAR_HIST_BINS + 1, NGRAM_BUCKETS
+        _text_block_udf(F.col("text")), CHAR_HIST_BINS + 1, NGRAM_BUCKETS
     ),
 )
 

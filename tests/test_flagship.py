@@ -103,3 +103,37 @@ def test_add_random_features_deterministic_and_normal(spark, transcripts):
     out_c, _ = add_random_features(base, reg, n=5, seed=8)
     rows_c = {(r.conv_id, r.turn_idx): r.features[-5:] for r in out_c.collect()}
     assert rows != rows_c
+
+
+def test_hand_texts_match_oracle(spark):
+    """Edge-case texts through the whole pipeline vs the oracle, whose
+    text blocks share no kernel with the engine. token_ids takes a
+    token's FIRST run of ASCII digits (Java's \\d), so "a1b2" -> 1 and
+    the Arabic-Indic digits of "x٣٤" do not count."""
+    import datetime as dt
+
+    import pandas as pd
+
+    texts = ["a1b2", "x٣٤", "12abc", "abc", "", "a  b", " x", "x ", "  ",
+             "héllo wörld", "a \U0001F600 b", "supercalifragilistic 7",
+             "tok1 tok22 tok333"]
+    t0 = dt.datetime(2024, 1, 1)
+    pdf = pd.DataFrame({
+        "conv_id": "c0",
+        "turn_idx": range(len(texts)),
+        "role": "user",
+        "text": texts,
+        "tool": None,
+        "ts": [t0 + dt.timedelta(seconds=60 * i) for i in range(len(texts))],
+    })
+    df = spark.createDataFrame(
+        pdf,
+        "conv_id string, turn_idx int, role string, text string, "
+        "tool string, ts timestamp",
+    )
+    out, registry = flagship_features(df)
+    got = np.array(out.orderBy("turn_idx").toPandas()["features"].tolist())
+    exp = np.array(oracle_flagship(pdf)["features"].tolist())
+    assert np.allclose(got, exp, atol=1e-9)
+    ids = got[:4, registry.index_of("token_ids:0")]
+    assert ids.tolist() == [0.001, -0.001, 0.012, -0.001]

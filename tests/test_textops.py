@@ -139,7 +139,8 @@ def test_fingerprint_order_sensitive(spark):
 
 def test_jvm_extractor_variants_bit_equal_numpy(spark, transcripts):
     """The documented (non-default) pure-JVM builders must stay
-    bit-equal to the numpy kernels the default Arrow UDFs use —
+    bit-equal to the oracle's per-token numpy kernels (which the
+    default Arrow kernel is pinned to in test_text_kernel.py) —
     Spark's crc32 == zlib.crc32 and identical division order."""
     import numpy as np
 
@@ -149,6 +150,8 @@ def test_jvm_extractor_variants_bit_equal_numpy(spark, transcripts):
         NGRAM_BUCKETS,
         _char_hist_jvm,
         _hashed_ngram_jvm,
+    )
+    from protosc_spark.oracle.pandas_flagship import (
         hashed_ngram_np,
         token_length_hist_np,
     )
